@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import logging
 from collections.abc import Iterable, Iterator
+from itertools import chain
 from typing import Any
 
 log = logging.getLogger(__name__)
@@ -50,6 +51,26 @@ class ChangelogError(ValueError):
     """Raised on malformed changelog records (bad op / wrong arity)."""
 
 
+def freeze(v: Any) -> Any:
+    """Hashable stand-in for a row value, used as a lookup key by the
+    emitter's snapshots and by ``MaterializedTable``: Spark rows carry
+    Python lists for array columns and dicts for maps, and wire rows
+    carry JSON arrays and objects — ``tuple(row)`` over those raises
+    TypeError (inside foreachBatch it kills the query, e.g. a keyless
+    complete-mode ``collect_list`` aggregate). Only the keys are
+    frozen, deterministically, so equality across batches and across a
+    JSON-checkpoint round-trip is preserved (decoded tuples compare
+    equal to frozen lists). Scalars are kept as they are, so frozen
+    keys compare and hash the way the cells do (``1 == 1.0 == True``)."""
+    if isinstance(v, (list, tuple)):  # tuple includes Row
+        return tuple(freeze(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((freeze(k), freeze(x)) for k, x in v.items()))
+    if isinstance(v, (bytearray, bytes)):
+        return bytes(v)
+    return v
+
+
 class MaterializedTable:
     """Incrementally-maintained snapshot of a changelog stream.
 
@@ -58,29 +79,61 @@ class MaterializedTable:
     value* (duplicates allowed — a retraction removes a single copy);
     retracting an absent row is a warning, not an error; records with
     no op (append-only results) are appended.
+
+    The table is an insertion-ordered multiset: a dict from the frozen
+    row (``freeze``) to the row's live copies, oldest first. Applying a
+    record is one dict update, O(1) whatever the table's size, where
+    the reference's ``list.remove`` scans the table per retraction.
+    ``rows`` lists distinct rows in the order of the list the
+    reference keeps: a row is appended when it appears, so an upsert
+    (-U old, +U new) moves the row to the end. Copies of one row are
+    listed together, at the position of the oldest live copy, and a
+    retraction removes the oldest copy — the reference interleaves
+    duplicates in arrival order instead, with the same multiset.
     """
 
     def __init__(self, columns: list[str], rows: list[list[Any]] | None = None):
         self.columns = list(columns)
-        self.rows: list[list[Any]] = [list(r) for r in (rows or [])]
+        self._copies: dict[Any, list[list[Any]]] = {}
+        self._len = 0
+        self.apply({"row": r} for r in rows or [])
+
+    @property
+    def rows(self) -> list[list[Any]]:
+        """The current rows, as fresh lists (mutating them does not
+        change the table)."""
+        return list(map(list, chain.from_iterable(self._copies.values())))
 
     def apply(self, records: Iterable[dict]) -> "MaterializedTable":
+        table = self._copies
         for rec in records:
             if rec is None:  # keep-alive
                 continue
             op = rec.get("op", None)
             row = rec["row"]
             if op in (OP_INSERT, OP_UPDATE_AFTER, None):
-                self.rows.append(list(row))
+                key = freeze(row)
+                copies = table.get(key)
+                if copies is None:
+                    table[key] = [list(row)]
+                else:
+                    copies.append(list(row))
+                self._len += 1
             elif op in (OP_UPDATE_BEFORE, OP_DELETE):
-                try:
-                    self.rows.remove(list(row))
-                except ValueError:
+                key = freeze(row)
+                copies = table.get(key)
+                if copies is None:
                     log.warning(
                         "retraction %s for absent row %r ignored",
                         OP_LABELS.get(op, op),
                         row,
                     )
+                    continue
+                if len(copies) == 1:
+                    del table[key]
+                else:
+                    del copies[0]
+                self._len -= 1
             else:
                 raise ChangelogError(f"unknown op code {op!r} in {rec!r}")
         return self
@@ -91,7 +144,7 @@ class MaterializedTable:
         return pd.DataFrame(self.rows, columns=self.columns)
 
     def __len__(self) -> int:
-        return len(self.rows)
+        return self._len
 
     def __eq__(self, other) -> bool:
         return (

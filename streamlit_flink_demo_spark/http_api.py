@@ -22,8 +22,13 @@ manual 307 handling for Confluent's data-plane bounce,
 ``api/statements.py:117-126``; pointing at one host removes the need).
 
 Scale posture: the handler only pages the statement's bounded ring
-buffer — no per-request Spark work, no result materialization beyond
-what the service already bounds (toLocalIterator chunks).
+buffer, 1,000 records a page unless the server is built with another
+``page_size`` (``statements.RESULTS_PAGE_SIZE``) — no Spark jobs per
+request, no result materialization beyond what the service already
+bounds (toLocalIterator chunks). A page that carries data touches
+nothing but the buffer. Only an empty read asks for the statement's
+phase, which for a streaming statement is a py4j call into the JVM
+(is the query alive, did it fail), and then reads the page again.
 """
 
 from __future__ import annotations
@@ -35,7 +40,11 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
-from streamlit_flink_demo_spark.statements import StatementsService, _json_safe
+from streamlit_flink_demo_spark.statements import (
+    RESULTS_PAGE_SIZE,
+    StatementsService,
+    _json_safe,
+)
 
 _STMT_RE = re.compile(
     r"^/sql/v1/organizations/[^/]+/environments/[^/]+/statements"
@@ -63,7 +72,7 @@ class StatementsHTTPServer:
         service: StatementsService,
         host: str = "127.0.0.1",
         port: int = 0,
-        page_size: int = 100,
+        page_size: int = RESULTS_PAGE_SIZE,
     ):
         self.service = service
         self.page_size = page_size
@@ -99,23 +108,33 @@ class StatementsHTTPServer:
                                 {"error": "page_token must be an integer"},
                             )
                             return
-                        # Phase BEFORE page: the worker appends its
-                        # final chunk and THEN flips to a terminal
-                        # phase, so a terminal phase observed first
-                        # guarantees the subsequent page read sees
-                        # every record — the reverse order could
-                        # observe an empty page, miss a final chunk,
-                        # then see 'completed' and drop the tail.
-                        env = outer.service.get(name)
                         records, nxt = outer.service.next_results(
                             name, cursor, outer.page_size
                         )
-                        done = (
-                            not env["status"]["phase"]
-                            in ("pending", "running")
-                            and nxt == cursor
-                            and not records
-                        )
+                        done = False
+                        if not records:
+                            # Phase BEFORE the final read: the worker
+                            # appends its final chunk and THEN flips
+                            # to a terminal phase, so a terminal phase
+                            # observed first guarantees the re-read
+                            # sees every record — ending on the empty
+                            # read above could miss a final chunk
+                            # appended since and drop the tail. Only
+                            # empty pages read the phase (a py4j call
+                            # for streaming statements).
+                            env = outer.service.get(name)
+                            records, nxt = outer.service.next_results(
+                                name, cursor, outer.page_size
+                            )
+                            # nxt == cursor: a cursor that moved past
+                            # evicted records goes out as `next` first,
+                            # so the client can count the gap.
+                            done = (
+                                env["status"]["phase"]
+                                not in ("pending", "running")
+                                and nxt == cursor
+                                and not records
+                            )
                         self._json(
                             200,
                             {

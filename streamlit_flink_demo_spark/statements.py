@@ -47,6 +47,12 @@ from streamlit_flink_demo_spark.streaming.emitter import (
 # shuffle.partitions stuck at 1 for every later batch query).
 _START_CONF_LOCK = threading.Lock()
 
+# Records per results page, for the HTTP facade, ``next_results`` and
+# ``results``: a page's fixed cost (request, handler thread, phase
+# check, JSON framing) is paid once per 1,000 records, so a burst of a
+# few thousand changelog records drains in a few GETs, not dozens.
+RESULTS_PAGE_SIZE = 1000
+
 PHASE_PENDING = "pending"
 PHASE_RUNNING = "running"
 PHASE_COMPLETED = "completed"
@@ -797,7 +803,7 @@ class StatementsService:
 
     # -- results ----------------------------------------------------------
     def next_results(
-        self, name: str, cursor: int = 0, page_size: int = 100
+        self, name: str, cursor: int = 0, page_size: int = RESULTS_PAGE_SIZE
     ) -> tuple[list[dict], int]:
         """Single-page fetch (reference ``next_results(url)``,
         api/statements.py:96-103): returns (records, next_cursor).
@@ -810,7 +816,7 @@ class StatementsService:
         self,
         name: str,
         continuous_query: bool = False,
-        page_size: int = 100,
+        page_size: int = RESULTS_PAGE_SIZE,
         backoff: bool = False,
         backoff_cap_s: float = 0.3,
     ):

@@ -40,6 +40,7 @@ from streamlit_flink_demo_spark.changelog import (
     OP_INSERT,
     OP_UPDATE_AFTER,
     OP_UPDATE_BEFORE,
+    freeze,
 )
 
 # -- snapshot value encoding ------------------------------------------------
@@ -101,26 +102,6 @@ def _dec(v: Any) -> Any:
         if t == "map":
             return {_dec(k): _dec(e) for k, e in x}
         return x  # "str"
-    return v
-
-
-def _freeze(v: Any) -> Any:
-    """Hashable stand-in for a row value used in snapshot KEYS: Spark
-    rows carry Python lists for array columns and dicts for maps —
-    ``tuple(row)`` over those raises TypeError inside foreachBatch and
-    kills the query (e.g. a keyless complete-mode ``collect_list``
-    aggregate). Values stored in the snapshot stay as-is; only the
-    lookup keys are frozen (deterministically, so equality across
-    batches and across a JSON-checkpoint round-trip is preserved:
-    decoded tuples compare equal to frozen lists)."""
-    if isinstance(v, list):
-        return tuple(_freeze(x) for x in v)
-    if isinstance(v, tuple):  # includes Row
-        return tuple(_freeze(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((_freeze(k), _freeze(x)) for k, x in v.items()))
-    if isinstance(v, (bytearray, bytes)):
-        return bytes(v)
     return v
 
 
@@ -408,7 +389,7 @@ class ChangelogEmitter:
             out = [{"op": OP_INSERT, "row": r} for r in rows]
         else:
             for row in rows:
-                key = tuple(_freeze(row[i]) for i in self.key_idx)
+                key = tuple(freeze(row[i]) for i in self.key_idx)
                 old = self._snapshot.get(key)
                 if old is None:
                     out.append({"op": OP_INSERT, "row": row})
@@ -436,7 +417,7 @@ class ChangelogEmitter:
             new_snap: dict[tuple, list[Any]] = {}
             new_counts: dict[tuple, int] = {}
             for row in rows:
-                key = _freeze(tuple(row))
+                key = freeze(tuple(row))
                 new_snap[key] = row
                 new_counts[key] = new_counts.get(key, 0) + 1
             if (
@@ -466,7 +447,7 @@ class ChangelogEmitter:
             return out
         new_snap = {}
         for row in rows:
-            key = tuple(_freeze(row[i]) for i in self.key_idx)
+            key = tuple(freeze(row[i]) for i in self.key_idx)
             new_snap[key] = row
             old = self._snapshot.get(key)
             if old is None:

@@ -8,11 +8,13 @@ keep-alive skipping, and the collapse ≡ incremental-fold invariant.
 from __future__ import annotations
 
 import logging
+from unittest import mock
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from streamlit_flink_demo_spark import changelog
 from streamlit_flink_demo_spark.changelog import (
     Changelog,
     ChangelogError,
@@ -21,6 +23,7 @@ from streamlit_flink_demo_spark.changelog import (
     OP_INSERT,
     OP_UPDATE_AFTER,
     OP_UPDATE_BEFORE,
+    freeze,
 )
 
 COLS = ["eyeColor", "n"]
@@ -113,3 +116,86 @@ def test_retract_then_reapply_is_identity():
     t2 = MaterializedTable(COLS, [["a", 1], ["b", 2]])
     t2.apply([rec(OP_UPDATE_BEFORE, "a", 1), rec(OP_UPDATE_AFTER, "a", 1)])
     assert t1 == t2
+
+
+# -- differential: hash-indexed table vs the list-backed fold ---------------
+
+
+class ListFold:
+    """The list-backed fold ``MaterializedTable`` used before its hash
+    index (the reference's ``Table.update``): append on +I/+U/no-op,
+    ``list.remove`` of the first equal row on -U/-D, count the
+    retractions of absent rows."""
+
+    def __init__(self):
+        self.rows: list[list] = []
+        self.absent = 0
+
+    def apply(self, records):
+        for r in records:
+            op, row = r.get("op", None), r["row"]
+            if op in (OP_INSERT, OP_UPDATE_AFTER, None):
+                self.rows.append(list(row))
+            else:
+                try:
+                    self.rows.remove(list(row))
+                except ValueError:
+                    self.absent += 1
+
+
+# Cells that are equal across types (1 == 1.0 == True) and list / dict
+# cells, drawn per column as a typed schema would: a column holds lists
+# or dicts, never both.
+_num = st.sampled_from([0, 1, 1.0, True, 2, -0.0])
+_cells = st.tuples(
+    st.sampled_from(["a", "b"]),
+    _num,
+    st.none() | st.lists(_num, max_size=2),
+    st.none() | st.dictionaries(st.sampled_from(["x", "y"]), _num, max_size=2),
+)
+
+
+@st.composite
+def _histories(draw):
+    # a small pool of rows so that retractions hit and duplicates occur
+    pool = draw(st.lists(_cells, min_size=1, max_size=4))
+    ops = st.sampled_from([OP_INSERT, OP_UPDATE_BEFORE, OP_UPDATE_AFTER, OP_DELETE, None])
+    return [
+        {"row": list(row)} if op is None else rec(op, *row)
+        for op, row in draw(st.lists(st.tuples(ops, st.sampled_from(pool)), max_size=40))
+    ]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_histories())
+def test_hash_index_matches_list_fold(history):
+    oracle = ListFold()
+    table = MaterializedTable(["k", "n", "l", "m"])
+    had_duplicates = False
+    with mock.patch.object(changelog.log, "warning") as warn:
+        for r in history:
+            oracle.apply([r])
+            table.apply([r])
+            # the same multiset, value for value (repr tells 1, 1.0 and
+            # True apart), after every record
+            assert sorted(map(repr, table.rows)) == sorted(map(repr, oracle.rows))
+            assert len(table) == len(oracle.rows)
+            keys = [freeze(row) for row in oracle.rows]
+            had_duplicates |= len(set(keys)) < len(keys)
+    assert warn.call_count == oracle.absent
+    if not had_duplicates:
+        assert repr(table.rows) == repr(oracle.rows)
+    whole = MaterializedTable(table.columns)
+    with mock.patch.object(changelog.log, "warning"):
+        whole.apply(history)
+    assert repr(whole.rows) == repr(table.rows)
+
+
+def test_rows_is_a_copy():
+    """Editing what ``rows`` returned leaves the table and its index
+    intact."""
+    t = MaterializedTable(COLS, [["a", [1, 2]]])
+    t.rows[0].append("x")
+    assert t.rows == [["a", [1, 2]]]
+    t.apply([rec(OP_DELETE, "a", [1, 2])])
+    assert len(t) == 0

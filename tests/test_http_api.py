@@ -7,6 +7,7 @@ with no redirects."""
 from __future__ import annotations
 
 import json
+import math
 import secrets
 import urllib.request
 from urllib.error import HTTPError
@@ -15,7 +16,11 @@ import pytest
 
 from streamlit_flink_demo_spark.http_api import StatementsHTTPServer
 from streamlit_flink_demo_spark.sources.catalog import register_tables
-from streamlit_flink_demo_spark.statements import StatementsService
+from streamlit_flink_demo_spark.statements import (
+    RESULTS_PAGE_SIZE,
+    StatementsService,
+)
+from streamlit_flink_demo_spark.streaming.emitter import ResultBuffer
 
 
 @pytest.fixture(scope="module")
@@ -131,3 +136,105 @@ def test_continuous_statement_keepalive_and_delete(server, spark, tmp_path):
     with urllib.request.urlopen(req) as r:
         assert r.status == 200
     assert _get(f"{root}/{name}")["status"]["phase"] == "stopped"
+
+
+def _pages(srv: StatementsHTTPServer, name: str, max_pages: int = 100) -> list[tuple[list, str]]:
+    """Follow ``metadata.next`` from the first results page until it
+    empties; returns every page as (records, next). More than
+    ``max_pages`` pages fails the test."""
+    host, port = srv.address
+    url, pages = f"{srv.url()}/{name}/results", []
+    while url:
+        page = _get(url)
+        pages.append((page["results"]["data"], page["metadata"]["next"]))
+        url = pages[-1][1] and f"http://{host}:{port}{pages[-1][1]}"
+        assert len(pages) <= max_pages
+    return pages
+
+
+class _RacingService:
+    """A statement whose worker lands its final chunk and flips to
+    'completed' after the handler's first read of an empty page and
+    before it asks for the phase — the race the results GET must not
+    lose a tail to. ``gets`` counts phase reads (py4j calls on a real
+    streaming statement)."""
+
+    def __init__(self, first: list[dict], final: list[dict], max_records: int = 100_000):
+        self.buffer = ResultBuffer(max_records)
+        self.buffer.append(first)
+        self.final = final
+        self.phase = "running"
+        self.gets = 0
+
+    def get(self, name: str) -> dict:
+        self.gets += 1
+        if self.phase == "running":
+            self.buffer.append(self.final)
+            self.phase = "completed"
+        return {"status": {"phase": self.phase}}
+
+    def next_results(self, name: str, cursor: int, page_size: int):
+        return self.buffer.read(cursor, page_size)
+
+
+def test_results_get_serves_chunk_landed_before_phase_flip():
+    first = [{"row": [i]} for i in range(3)]
+    final = [{"row": [i]} for i in range(3, 5)]
+    svc = _RacingService(first, final)
+    srv = StatementsHTTPServer(svc).start()
+    try:
+        pages = _pages(srv, "s")
+    finally:
+        srv.stop()
+    # the data page made no phase read; the empty read that raced the
+    # final chunk re-read after the phase and served it; only then did
+    # the stream end
+    assert [len(recs) for recs, _ in pages] == [3, 2, 0]
+    assert [r for recs, _ in pages for r in recs] == first + final
+    assert [nxt.rsplit("=", 1)[-1] for _, nxt in pages[:2]] == ["3", "5"]
+    assert pages[-1][1] == ""
+    assert svc.gets == 2
+
+
+def test_results_get_reports_evicted_records_before_ending():
+    """An empty read whose cursor moved past evicted records is not the
+    end of a finished stream: the moved page token goes out first, so
+    the client can count what it lost, and the stream ends after it."""
+    svc = _RacingService([{"row": [i]} for i in range(6)], [], max_records=0)
+    svc.phase = "completed"
+    srv = StatementsHTTPServer(svc).start()
+    try:
+        pages = _pages(srv, "s")
+    finally:
+        srv.stop()
+    assert pages[0][0] == [] and pages[0][1].endswith("/s/results?page_token=6")
+    assert pages[1] == ([], "")
+
+
+def test_batch_results_span_default_pages(spark, sf_dir):
+    """A result larger than one default page, over a server built with
+    the default page size: full pages, then the remainder, then the
+    end. Runs at the configured test scale (orders is 1,500 rows at
+    sf0.001, 15,000 at sf0.01)."""
+    if not register_tables(spark, sf_dir, ("orders",)):
+        pytest.skip(f"no orders table at {sf_dir}")
+    n = spark.table("orders").count()
+    if n <= RESULTS_PAGE_SIZE:
+        pytest.skip(f"orders has {n} rows at {sf_dir}, not more than one page")
+    svc = StatementsService(spark)
+    srv = StatementsHTTPServer(svc).start()
+    try:
+        name = "test-" + secrets.token_hex(6)
+        _post(srv.url(), {"name": name, "spec": {"statement": "SELECT o_orderkey FROM orders"}})
+        assert svc.wait_for_status(name, "completed", timeout=120)
+        pages = _pages(srv, name, max_pages=math.ceil(n / RESULTS_PAGE_SIZE) + 1)
+    finally:
+        srv.stop()
+    rows = [r["row"][0] for recs, _ in pages for r in recs]
+    assert len(rows) == len(set(rows)) == n
+    data_pages = [len(recs) for recs, _ in pages if recs]
+    assert len(data_pages) == math.ceil(n / RESULTS_PAGE_SIZE) >= 2
+    assert data_pages[:-1] == [RESULTS_PAGE_SIZE] * (len(data_pages) - 1)
+    assert data_pages[-1] == n - RESULTS_PAGE_SIZE * (len(data_pages) - 1)
+    assert pages[-1] == ([], "")
+    assert all(nxt for _, nxt in pages[:-1])
